@@ -122,10 +122,10 @@ def test_blocks_json_xywh_format(spark):
         from vlm_ocr_pipeline_spark.operators.stages import detect_batch, with_lineage
 
         pages = datagen.synth_pages(spark, 5, partitions=1)
-        out_cols = [f.name for f in schema.blocks_stage_schema().fields if f.name != "_lineage"]
+        out_schema = schema.blocks_stage_schema()
         blocks = pages.select("url", "warc_ts", "html").mapInPandas(
-            with_lineage(detect_batch, "detect", "t", out_cols),
-            schema=schema.blocks_stage_schema(),
+            with_lineage(detect_batch, "detect", "t", out_schema),
+            schema=out_schema,
         ).filter(F.col("_lineage").isNull())
         srcio.write_blocks_json(blocks, f"{base}/blocks_json")
         back = spark.read.json(f"{base}/blocks_json")

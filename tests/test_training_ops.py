@@ -839,9 +839,11 @@ def test_incremental_neardup_store_side_streams_into_broadcast_join(spark, tmp_p
     )
     plan = kept._jdf.queryExecution().executedPlan().toString()
     lines = plan.splitlines()
-    idx = next(
-        i for i, l in enumerate(lines) if "FileScan parquet" in l and "store" in l
-    )
+    # the batch side is in-memory, so the only parquet scan is the store's
+    # (matched by node name: Spark truncates the Location path in the plan)
+    scans = [i for i, l in enumerate(lines) if "FileScan parquet" in l]
+    assert len(scans) == 1, plan
+    idx = scans[0]
     join_idx = max(i for i in range(idx) if "Join" in lines[i])
     join_line = lines[join_idx]
     assert "BroadcastHashJoin" in join_line and "BuildRight" in join_line, join_line

@@ -1,18 +1,17 @@
 """Multimodal column plumbing: image/audio/video as opaque binary
 columns with typed metadata.
 
-Decode is REAL for three containers that need no codec library
-(:func:`stdlib_pixel_decoder`): PNG (zlib + predictors,
-functions/png_codec.py), GIF incl. animations (LZW + compositing,
+Decode is REAL for the two lossless image containers that need no
+codec library (:func:`stdlib_pixel_decoder`): PNG (zlib + predictors,
+functions/png_codec.py) and GIF incl. animations (LZW + compositing,
 functions/gif_codec.py — which also makes :func:`sample_frames` real
-via :func:`stdlib_frame_extractor`), and WAV audio (RIFF/PCM,
-functions/wav_codec.py).  JPEG gets real header dimensions
-(:func:`header_decoder`); JPEG pixels and compressed audio/video
-remain behind ``decode_fn`` injection (codecs absent in this
-container) — the default raises NotImplementedError per modality, and
-:func:`deterministic_fake_decoder` provides a seeded stand-in so the
-Spark-side plumbing (schema, partitioning, mapInPandas batch shape,
-feature vector layout) is tested end-to-end either way.
+via :func:`stdlib_frame_extractor`).  JPEG gets real header dimensions
+(:func:`header_decoder`); JPEG pixels and audio/video remain behind
+``decode_fn`` injection — the ``real_*`` defaults raise
+NotImplementedError, which surfaces as a 'stubbed:no_codec' status
+row, and the ``deterministic_fake_*`` stand-ins give seeded outputs so
+the Spark-side plumbing (schema, partitioning, mapInPandas batch
+shape, feature vector layout) is tested end-to-end either way.
 
 Design for 100 TB: binary payloads never leave the scan until the
 decode stage; metadata-only queries (count, size histograms, format
@@ -153,17 +152,10 @@ def stdlib_pixel_decoder(kind: str, payload: bytes) -> dict:
     - GIF (LZW + compositing, functions/gif_codec.py): logical-screen
       dims, exact ``n_frames`` (block walk — only the first frame pays
       LZW decode), features from the first composited frame's RGB.
-    - JPEG, baseline AND progressive (huffman + two-matmul IDCT,
-      successive-approximation scans, functions/jpeg_codec.py): true
-      dims + pixel-stat features; arithmetic-coded/lossless variants
-      degrade to real header dims, features null.
-    - WAV (RIFF/PCM, functions/wav_codec.py), mapped onto the image
-      schema as width=sample_rate, height=n_channels,
-      n_frames=n_samples, features=16 audio stats (rms/zcr/spectral
-      bands — see wav_codec.audio_features).
 
-    Everything else raises NotImplementedError and surfaces as a
-    'stubbed:no_codec' status row."""
+    Everything else goes to :func:`header_decoder`: real JPEG header
+    dims with null features, and a 'stubbed:no_codec' status row for
+    non-image payloads."""
     p = bytes(payload)
     if p[:8] == b"\x89PNG\r\n\x1a\n":
         from ..functions.png_codec import decode_png, pixel_features
@@ -186,56 +178,26 @@ def stdlib_pixel_decoder(kind: str, payload: bytes) -> dict:
             "n_frames": min(d["n_frames"], 2**31 - 1),
             "features": pixel_features(d["frames"][0][:, :, :3]),
         }
-    if p[:2] == b"\xff\xd8":
-        from ..functions.jpeg_codec import decode_jpeg
-        from ..functions.png_codec import pixel_features
-
-        try:
-            arr = decode_jpeg(p)
-        except NotImplementedError:
-            # arithmetic/lossless variants: header dims still real
-            return header_decoder(kind, payload)
-        return {
-            "width": int(arr.shape[1]),
-            "height": int(arr.shape[0]),
-            "n_frames": 1,
-            "features": pixel_features(arr),
-        }
-    if p[:4] == b"RIFF" and p[8:12] == b"WAVE":
-        from ..functions.wav_codec import audio_features, decode_wav
-
-        d = decode_wav(p)
-        return {
-            "width": d["sample_rate"],
-            "height": d["n_channels"],
-            "n_frames": min(d["n_samples"], 2**31 - 1),
-            "features": audio_features(d),
-        }
     return header_decoder(kind, payload)
 
 
 def stdlib_png_resizer(kind: str, payload: bytes, width: int, height: int) -> bytes:
-    """REAL resize for PNG, baseline-JPEG, and (first-frame) GIF
-    payloads: decode (pure stdlib), box-average (nearest when dims
-    don't divide), re-encode as PNG — the thumbnail normal form, so
-    downstream stages see one format.  Other formats raise
-    NotImplementedError -> status row."""
+    """REAL resize for PNG and (first-frame) GIF payloads: decode (pure
+    stdlib), box-average (nearest when dims don't divide), re-encode as
+    PNG — the thumbnail normal form, so downstream stages see one
+    format.  Other formats raise NotImplementedError -> status row."""
     from ..functions.png_codec import decode_png, encode_png, resize_box
 
     p = bytes(payload)
     if p[:8] == b"\x89PNG\r\n\x1a\n":
         return encode_png(resize_box(decode_png(p), width, height))
-    if p[:2] == b"\xff\xd8":
-        from ..functions.jpeg_codec import decode_jpeg
-
-        return encode_png(resize_box(decode_jpeg(p), width, height))
     if p[:6] in (b"GIF87a", b"GIF89a"):
         from ..functions.gif_codec import decode_gif
 
         frame = decode_gif(p, max_decode_frames=1)["frames"][0]
         return encode_png(resize_box(frame, width, height))
     raise NotImplementedError(
-        f"stdlib resizer handles PNG/JPEG/GIF only (got kind={kind!r}); "
+        f"stdlib resizer handles PNG/GIF only (got kind={kind!r}); "
         "inject resize_fn for other formats"
     )
 
@@ -260,13 +222,11 @@ def stdlib_frame_extractor(kind: str, payload: bytes) -> list[bytes]:
 
 
 def real_decoder(kind: str, payload: bytes) -> dict:
-    """Placeholder for the codec-backed decoder for formats the
-    stdlib path can't decode (JPEG pixels, compressed audio, video).
-
-    NOT IMPLEMENTED in this container: PIL/ffmpeg/librosa are absent.
-    On a real cluster, plug a decode_fn with the same signature into
-    :func:`extract_media_features`.  PNG, GIF, and WAV need no
-    injection — use :func:`stdlib_pixel_decoder`.
+    """Placeholder for a codec-backed decoder for formats the stdlib
+    path can't decode (JPEG pixels, audio, video).  Plug a decode_fn
+    with the same signature (e.g. wrapping PIL / av / soundfile) into
+    :func:`extract_media_features`.  PNG and GIF need no injection —
+    use :func:`stdlib_pixel_decoder`.
     """
     raise NotImplementedError(
         f"no codec available for kind={kind!r}; inject decode_fn "
@@ -418,8 +378,8 @@ FRAME_SCHEMA = T.StructType(
 
 
 def real_resizer(kind: str, payload: bytes, width: int, height: int) -> bytes:
-    """Placeholder for the codec-backed resizer (PIL.Image.resize /
-    ffmpeg scale) — absent in this container; inject on a cluster."""
+    """Placeholder for a codec-backed resizer (PIL.Image.resize /
+    ffmpeg scale) — none ships with the package; inject resize_fn."""
     raise NotImplementedError(
         f"no codec available to resize kind={kind!r}; inject resize_fn"
     )
@@ -496,8 +456,8 @@ def resize_media(
 
 
 def real_frame_extractor(kind: str, payload: bytes) -> list[bytes]:
-    """Placeholder for the codec-backed frame extractor (av/ffmpeg) —
-    absent in this container; inject on a cluster."""
+    """Placeholder for a codec-backed frame extractor (av/ffmpeg) —
+    none ships with the package; inject frame_fn."""
     raise NotImplementedError(
         f"no codec available to extract frames from kind={kind!r}"
     )

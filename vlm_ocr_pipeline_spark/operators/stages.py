@@ -29,6 +29,7 @@ from datetime import datetime, timezone
 from typing import Any
 
 import pandas as pd
+from pyspark.sql.types import StructType
 
 from ..functions import (
     charset,
@@ -84,17 +85,9 @@ def detect_batch(pdf: pd.DataFrame) -> pd.DataFrame:
         status = "detected"
         try:
             if kind == "pdf":
-                spans = pdf_extract.extract_pdf_spans(payload)
-                blocks = pdf_extract.spans_to_blocks(spans)
+                blocks, title = _detect_pdf(payload)
             elif kind == "html":
-                # charset ladder, not utf-8/replace: a windows-1251 or
-                # Shift_JIS page decodes byte-exactly instead of
-                # becoming U+FFFD soup (functions/charset.py)
-                page = html_extract.extract_html_page(
-                    charset.decode_payload(payload)[0]
-                )
-                blocks = page["blocks"]
-                title = page["title"]
+                blocks, title = _detect_html(payload)
             else:
                 status = "failed:empty_payload"
         except Exception as e:  # defensive: parse failures are row status
@@ -138,7 +131,8 @@ def _sort_xycut(blocks: list[dict[str, Any]]) -> list[dict[str, Any]]:
     for rank, b in enumerate(ordered):
         b["order"] = rank
     # blocks the projection split dropped (degenerate coords) keep order=None
-    leftovers = [blocks[i] for i in range(len(blocks)) if i not in set(perm.tolist())]
+    placed = set(perm.tolist())
+    leftovers = [blocks[i] for i in range(len(blocks)) if i not in placed]
     return ordered + leftovers
 
 
@@ -200,6 +194,8 @@ SORTERS: dict[str, Callable[[list[dict[str, Any]]], list[dict[str, Any]]]] = {
 # registry, pipeline/layout/detection/registry.py:23-174).  A detector
 # takes the raw payload and returns (blocks, page_title).
 def _detect_html(payload: bytes) -> tuple[list[dict[str, Any]], str | None]:
+    # charset ladder, not utf-8/replace: a windows-1251 or Shift_JIS page
+    # decodes byte-exactly instead of becoming U+FFFD soup (charset.py)
     page = html_extract.extract_html_page(charset.decode_payload(payload)[0])
     return page["blocks"], page["title"]
 
@@ -290,11 +286,7 @@ def _correct_blocks(blocks: list[dict[str, Any]], kind: str) -> None:
         b["correction_ratio"] = None
 
 
-def finish_batch(
-    pdf: pd.DataFrame,
-    image_render_mode: str = "image_and_description",
-    renderer: str = "both",
-) -> pd.DataFrame:
+def finish_batch(pdf: pd.DataFrame, renderer: str = "both") -> pd.DataFrame:
     """Stages 5-7 analog: block correction, page composition, rendering,
     page status.
 
@@ -325,8 +317,8 @@ def finish_batch(
             # skip the per-block dict copies and the second compose
             # (and correction_ratio's identical-string guard hits)
             corrected = raw
-        md = rendering.render_markdown(blocks, image_render_mode) if want_md else None
-        pt = rendering.render_plaintext(blocks, image_render_mode) if want_pt else None
+        md = rendering.render_markdown(blocks) if want_md else None
+        pt = rendering.render_plaintext(blocks) if want_pt else None
         primary = pt if want_pt else md
         if status.startswith("failed"):
             st = "partial"  # failed -> partial (output_stage.py:213-219)
@@ -366,14 +358,10 @@ def finish_batch(
     return pd.DataFrame(out)
 
 
-def fused_extract_batch(
-    pdf: pd.DataFrame,
-    image_render_mode: str = "image_and_description",
-    renderer: str = "both",
-) -> pd.DataFrame:
+def fused_extract_batch(pdf: pd.DataFrame, renderer: str = "both") -> pd.DataFrame:
     """detect -> order -> finish composed in one pass (no intermediate
     Arrow round-trips) — the fast path when checkpoints are disabled."""
-    return finish_batch(order_batch(detect_batch(pdf)), image_render_mode, renderer)
+    return finish_batch(order_batch(detect_batch(pdf)), renderer)
 
 
 def font_markdown_batch(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -403,11 +391,13 @@ def font_markdown_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 
 # ------------------------------------------------------- lineage wrapper
 def with_lineage(
-    fn: PandasStage, stage: str, run_id: str, out_columns: list[str]
+    fn: PandasStage, stage: str, run_id: str, out_schema: StructType
 ) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
-    """Wrap a pandas stage for mapInPandas: per-partition init happens
-    here (once per task), and a single lineage row is appended after the
-    last batch."""
+    """Wrap a pandas stage for mapInPandas over ``out_schema`` (the
+    stage's columns plus ``_lineage``): per-partition init happens here
+    (once per task), and a single lineage row is appended after the last
+    batch."""
+    out_columns = [f.name for f in out_schema.fields if f.name != "_lineage"]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from pyspark import TaskContext

@@ -23,7 +23,7 @@ from __future__ import annotations
 import os
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from .. import schema
 from ..operators import stages
@@ -55,7 +55,6 @@ def extract(
     run_id: str = "adhoc",
     repartition_to: int | None = None,
     keep_lineage: bool = False,
-    image_render_mode: str = "image_and_description",
     renderer: str = "both",
 ) -> DataFrame:
     """Fused extraction: pages -> stage_text rows, lazily.
@@ -72,14 +71,9 @@ def extract(
     if repartition_to:
         src = salted_repartition(src, repartition_to)
     out_schema = schema.text_stage_schema(renderer)
-    out_cols = [f.name for f in out_schema.fields if f.name != "_lineage"]
     fn = stages.with_lineage(
-        functools.partial(
-            stages.fused_extract_batch,
-            image_render_mode=image_render_mode,
-            renderer=renderer,
-        ),
-        "extract_fused", run_id, out_cols,
+        functools.partial(stages.fused_extract_batch, renderer=renderer),
+        "extract_fused", run_id, out_schema,
     )
     out = src.mapInPandas(fn, schema=out_schema)
     if keep_lineage:
@@ -92,25 +86,23 @@ def extract_pdf_font_markdown(pages: DataFrame, run_id: str = "adhoc") -> DataFr
     levels (the reference's third markdown renderer).  Same zero-shuffle
     shape as :func:`extract`: scan -> one mapInPandas -> columns."""
     src = pages.select("url", "warc_ts", "html")
-    out_schema = (
-        "url string, warc_ts timestamp, rendered_markdown string, "
-        "status string, _lineage struct<run_id:string, stage:string, "
-        "partition_id:int, docs_in:long, docs_out:long, bytes_in:long, "
-        "wall_clock_ms:long, ts:timestamp>"
+    out_schema = T.StructType(
+        [
+            T.StructField("url", T.StringType()),
+            T.StructField("warc_ts", T.TimestampType()),
+            T.StructField("rendered_markdown", T.StringType()),
+            T.StructField("status", T.StringType()),
+            T.StructField("_lineage", schema.LINEAGE_STRUCT),
+        ]
     )
-    out_cols = ["url", "warc_ts", "rendered_markdown", "status"]
     fn = stages.with_lineage(
-        stages.font_markdown_batch, "extract_font_md", run_id, out_cols
+        stages.font_markdown_batch, "extract_font_md", run_id, out_schema
     )
     out = src.mapInPandas(fn, schema=out_schema)
     return out.filter(F.col("_lineage").isNull()).drop("_lineage")
 
 
-def extract_dedup_aware(
-    pages: DataFrame,
-    run_id: str = "adhoc",
-    image_render_mode: str = "image_and_description",
-) -> DataFrame:
+def extract_dedup_aware(pages: DataFrame, run_id: str = "adhoc") -> DataFrame:
     """Content-hash-memoized extraction: parse each DISTINCT payload
     once, then broadcast-free join results back to every (url, warc_ts).
 
@@ -133,9 +125,11 @@ def extract_dedup_aware(
         F.lit(None).cast("timestamp").alias("warc_ts"),
         "html",
     )
-    extracted = extract(
-        as_pages, run_id=run_id, image_render_mode=image_render_mode
-    ).withColumnRenamed("url", "content_hash").drop("warc_ts")
+    extracted = (
+        extract(as_pages, run_id=run_id)
+        .withColumnRenamed("url", "content_hash")
+        .drop("warc_ts")
+    )
     return hashed.drop("html").join(extracted, "content_hash")
 
 
@@ -179,8 +173,7 @@ class CheckpointedRun:
         todo = src
         if done is not None:
             todo = src.join(done, on=schema.KEY_COLS, how="left_anti")
-        out_cols = [f.name for f in out_schema.fields if f.name != "_lineage"]
-        wrapped = stages.with_lineage(fn, name, self.run_id, out_cols)
+        wrapped = stages.with_lineage(fn, name, self.run_id, out_schema)
         result = todo.mapInPandas(wrapped, schema=out_schema)
         # one write materializes both the stage rows and lineage markers
         result.write.mode("append").parquet(self._path(name))

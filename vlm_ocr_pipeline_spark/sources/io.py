@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 def write_stage_text_json(text_df: DataFrame, path: str) -> None:
     """Per-page JSON export (S9 analog of json/page_N.json): one JSON
     object per line keyed by (url, warc_ts)."""
-    text_df.drop("_lineage", *[c for c in [] if c]).write.mode("overwrite").json(path)
+    text_df.drop("_lineage").write.mode("overwrite").json(path)
 
 
 def write_blocks_json(blocks_df: DataFrame, path: str) -> None:
